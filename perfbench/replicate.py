@@ -139,7 +139,6 @@ def run(ctx: harness.Ctx) -> dict:
                 )
 
         snapshots = harness.Background(write_snapshots)
-        before_append = [snapshots.join]
 
         def deliver(txns: list[gen.Txn]) -> float:
             with tr.span("cycle", changes=sum(len(t.changes) for t in txns)):
@@ -155,8 +154,7 @@ def run(ctx: harness.Ctx) -> dict:
                     dec = decode_pgoutput_frames(fdf, rels).persist()
                     sp["events"] = dec.count()
                 try:
-                    while before_append:
-                        before_append.pop()()
+                    snapshots.join()  # the warm-up cycle drains the snapshot too
                     with tr.span("changelog.append"):
                         dec.write.mode("append").format("parquet").save(pipe.changelog_dir)
                     harness.drain(ctx, pipe)
