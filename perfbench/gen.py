@@ -60,6 +60,10 @@ CARTS = TableSpec("carts", 16403, (("cart_id", 20, True), ("user_id", 20, False)
 REPLICATED = (USERS, ORDER_ITEMS, CARTS)
 ALTER_TABLE, ALTER_COLUMN = "users", "tier"
 TRUNCATE_TABLE = "carts"
+# snapshot sizes of the replicated tables, and the key skew of their changes
+N_USERS, N_ORDERS, LINES_PER_ORDER, N_CARTS = 2000, 500, 3, 400
+REPLICATE_ZIPF_A = 1.3
+SERVE_ZIPF_A = 1.2  # key skew of the accounts changes
 
 ACCOUNTS = TableSpec(
     "accounts",
@@ -185,35 +189,21 @@ class ReplicateStream:
     TABLE_WEIGHTS = (0.5, 0.35, 0.15)
     OP_WEIGHTS = {"update": 0.6, "insert": 0.25, "delete": 0.15}
 
-    def __init__(
-        self,
-        seed: int,
-        *,
-        rate: float,
-        seconds: float,
-        warmup_s: float,
-        n_users: int = 2000,
-        n_orders: int = 500,
-        lines_per_order: int = 3,
-        n_carts: int = 400,
-        zipf_a: float = 1.3,
-    ):
+    def __init__(self, seed: int, *, rate: float, seconds: float, warmup_s: float):
         self.rng = random.Random(seed)
         self.np_rng = np.random.Generator(np.random.PCG64(seed))
-        self.zipf_a = zipf_a
-        self.n_users = n_users
         self.snapshot = {
-            "users": [self._user_row(str(i), altered=False) for i in range(n_users)],
+            "users": [self._user_row(str(i), altered=False) for i in range(N_USERS)],
             "order_items": [
-                self._item_row(str(o), str(ln)) for o in range(n_orders) for ln in range(1, lines_per_order + 1)
+                self._item_row(str(o), str(ln)) for o in range(N_ORDERS) for ln in range(1, LINES_PER_ORDER + 1)
             ],
-            "carts": [self._cart_row(str(c)) for c in range(n_carts)],
+            "carts": [self._cart_row(str(c)) for c in range(N_CARTS)],
         }
         self.specs = {s.name: s for s in REPLICATED}
         self._keys = {
             s.name: _Keys([tuple(r[k] for k in s.key_cols) for r in self.snapshot[s.name]]) for s in REPLICATED
         }
-        self._next = {"users": n_users, "order_items": n_orders, "carts": n_carts}
+        self._next = {"users": N_USERS, "order_items": N_ORDERS, "carts": N_CARTS}
         self._lsn = FIRST_LSN
         self.txns = self._build(rate, seconds, warmup_s)
 
@@ -241,7 +231,7 @@ class ReplicateStream:
     def _cart_row(self, cart_id: str) -> dict[str, str]:
         return {
             "cart_id": cart_id,
-            "user_id": str(self.rng.randrange(self.n_users)),
+            "user_id": str(self.rng.randrange(N_USERS)),
             "items": str(self.rng.randrange(1, 9)),
         }
 
@@ -276,7 +266,7 @@ class ReplicateStream:
             pk, row = self._new_row(table, None)
             keys.add(pk)
         else:
-            pk = keys.order[_zipf_index(self.np_rng, len(keys), self.zipf_a)]
+            pk = keys.order[_zipf_index(self.np_rng, len(keys), REPLICATE_ZIPF_A)]
             row = None
             if op == "update":
                 pk, row = self._new_row(table, pk)
@@ -363,11 +353,9 @@ class ServeStream:
         n_accounts: int = 10000,
         history_epochs: int = 4,
         history_epoch_changes: int = 2000,
-        zipf_a: float = 1.2,
     ):
         self.rng = random.Random(seed)
         self.np_rng = np.random.Generator(np.random.PCG64(seed))
-        self.zipf_a = zipf_a
         self.snapshot = [self._row(str(i)) for i in range(n_accounts)]
         self._keys = _Keys([(r["id"],) for r in self.snapshot])
         self._next = n_accounts
@@ -394,7 +382,7 @@ class ServeStream:
             self._next += 1
             self._keys.add((aid,))
             return Change("insert", "accounts", (aid,), self._row(aid), self._lsn, due)
-        pk = self._keys.order[_zipf_index(self.np_rng, len(self._keys), self.zipf_a)]
+        pk = self._keys.order[_zipf_index(self.np_rng, len(self._keys), SERVE_ZIPF_A)]
         if op == "delete":
             self._keys.remove(pk)
             return Change("delete", "accounts", pk, None, self._lsn, due)

@@ -1,11 +1,13 @@
-"""What both workloads share: the run context, the traced pipeline drain,
-the analyst's sink queries, and per-layer tallies from the span list."""
+"""What both workloads share: the run context, the timed window's bounds,
+the traced pipeline drain, the analyst's sink queries, and the sink's
+per-layer file and row tallies."""
 
 from __future__ import annotations
 
 import os
 import random
 import threading
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import functions as F
@@ -16,7 +18,7 @@ from change_data_capture_service_spark.streaming.sink import (
     read_event_log,
 )
 
-from .probes import dir_stats
+from .probes import dir_stats, stage_totals
 from .tracing import Tracer
 
 PG_TYPES = {20: "long", 23: "int", 25: "string"}
@@ -81,6 +83,24 @@ class Background:
         self._thread.join()
         if self._error is not None:
             raise self._error
+
+
+def open_window(ctx: Ctx) -> float:
+    """Start the timed window: set-up ends here. A traced run first reads
+    Spark's cumulative stage metrics, so ``spark.*`` covers the window."""
+    if ctx.trace:
+        ctx.notes["stages_t0"] = stage_totals(ctx.spark.sparkContext)
+    t0 = time.perf_counter()
+    ctx.notes["t0"] = t0
+    ctx.notes["setup_s"] = t0 - ctx.t_start
+    return t0
+
+
+def close_window(ctx: Ctx) -> None:
+    """End the timed window, before any correctness or layer-stat read."""
+    ctx.notes["window_end"] = time.perf_counter()
+    if ctx.trace:
+        ctx.notes["stages_t1"] = stage_totals(ctx.spark.sparkContext)
 
 
 # ---------------------------------------------------------------- analyst

@@ -121,14 +121,13 @@ class QueryStats:
 
 def closed_loop(
     queries: Callable[[], list[tuple[str, Callable[[], object]]]],
-    stop: threading.Event,
+    rounds: int,
     stats: QueryStats,
 ) -> None:
-    """One analyst: run rounds of (kind, query) back to back until ``stop``
-    is set, finishing the round in progress, so every run samples whole
-    rounds. A failed query counts as attempted and failed, with no
-    latency, and its round is not timed."""
-    while not stop.is_set():
+    """One analyst: run ``rounds`` rounds of (kind, query) back to back.
+    A failed query counts as attempted and failed, with no latency, and
+    its round is not timed."""
+    for _ in range(rounds):
         ok, start = True, time.perf_counter()
         for kind, q in queries():
             t = time.perf_counter()

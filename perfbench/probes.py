@@ -6,6 +6,8 @@ from __future__ import annotations
 import os
 import threading
 
+RSS_INTERVAL_S = 0.5
+
 
 def _children(pid: int) -> dict[int, list[int]]:
     kids: dict[int, list[int]] = {}
@@ -34,11 +36,10 @@ def _hwm_kb(pid: int) -> int:
 
 class RssSampler:
     """Samples the summed VmHWM of this process's descendants (the JVM
-    and the Python workers it forks) every ``interval`` seconds and keeps
+    and the Python workers it forks) every ``RSS_INTERVAL_S`` and keeps
     the highest sum. The benchmark's own interpreter is excluded."""
 
-    def __init__(self, interval: float = 0.5):
-        self.interval = interval
+    def __init__(self):
         self.peak_kb = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, name="rss-sampler", daemon=True)
@@ -53,7 +54,7 @@ class RssSampler:
         self.peak_kb = max(self.peak_kb, total)
 
     def _run(self) -> None:
-        while not self._stop.wait(self.interval):
+        while not self._stop.wait(RSS_INTERVAL_S):
             self.sample()
 
     def __enter__(self) -> "RssSampler":

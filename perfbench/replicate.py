@@ -32,7 +32,6 @@ from change_data_capture_service_spark.testing.walsender_mock import MockWalSend
 
 from . import gen, harness, oracle
 from .loop import OpenLoop, QueryStats
-from .probes import stage_totals
 
 RATE = 60.0  # offered changes per second
 WARMUP_S = 2.0  # changes due before the window, delivered by the untimed warm-up cycle
@@ -90,7 +89,7 @@ def _bulk_delete(url: str, index: str, ids: list[str]) -> None:
 
 
 def run(ctx: harness.Ctx) -> dict:
-    spark, tr, sc = ctx.spark, ctx.tracer, ctx.spark.sparkContext
+    spark, tr = ctx.spark, ctx.tracer
     stream = gen.ReplicateStream(ctx.seed, rate=RATE, seconds=ctx.seconds, warmup_s=WARMUP_S)
     ctx.notes["offered_rate_per_s"] = RATE
     w = ctx.work
@@ -172,33 +171,29 @@ def run(ctx: harness.Ctx) -> dict:
         deliver(warm)
         loop = OpenLoop(stream.txns, ctx.seconds, TRIGGER_S, deliver)
 
-        if ctx.trace:
-            ctx.notes["stages_t0"] = stage_totals(sc)
-        t0 = time.perf_counter()
-        ctx.notes["setup_s"] = t0 - ctx.t_start
-        stats = loop.run(t0)
-        ctx.notes["t0"] = t0
-        ctx.notes["window_end"] = time.perf_counter()
+        stats = loop.run(harness.open_window(ctx))
+        harness.close_window(ctx)
 
-        # ---- correctness, outside the timed region. Two rounds of full-table
-        # latest-state reads over the three replicated tables are also the
-        # analyst's queries over the state the window left behind (the first
-        # round pays for compiling the plan); the second round is checked
-        # against the truth.
+        # ---- correctness, outside the timed region. Full-table latest-state
+        # reads of the three replicated tables are also the analyst's queries
+        # over the state the window left behind: one untimed round compiles
+        # the plans, the next is timed and checked against the truth.
         truth = stream.truth()
         check = oracle.StateCheck(live_keys=truth.live())
         es_state = es.snapshot()
         qstats = QueryStats()
         found: dict[str, list] = {}
-        for _ in range(2):
+        for timed in (False, True):
             start = time.perf_counter()
             for spec in gen.REPLICATED:
                 with tr.span("query", kind="sink_latest_full"), tr.span("sink.latest_state"):
                     t = time.perf_counter()
                     view = latest_state_view(spark, pipe.sink_dir, "public", spec.name)
                     found[spec.name] = view.select("key", "after").collect()
-                    qstats.record("sink_latest_full", time.perf_counter() - t)
-            qstats.round_s.append(time.perf_counter() - start)
+                    if timed:
+                        qstats.record("sink_latest_full", time.perf_counter() - t)
+            if timed:
+                qstats.round_s.append(time.perf_counter() - start)
         for spec in gen.REPLICATED:
             want = truth.tables[spec.name]
             rows = [(r.key, r.after) for r in found[spec.name]]

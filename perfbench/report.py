@@ -78,6 +78,7 @@ LAYER_UNITS = {
     "gen.backlog_events_end": "count",
     "check.error_rate": "ratio",
     "check.mismatch_rate": "ratio",
+    "check.compact_read_failures": "count",
     "trace.overhead_s": "s",
     "trace.cycle_coverage": "ratio",
 }
@@ -119,8 +120,8 @@ def _layers(ctx, spans_all, loop, rate_errors, mismatch_rate) -> dict[str, float
             "pipeline.input_rows": _attr(spans, "pipeline.drain", "input_rows"),
             "pipeline.jobs_per_epoch": _attr(spans, "pipeline.drain", "stream_jobs") / max(epochs, 1),
             "sink.write_s": _mean_s(spans, "sink.write"),
-            "sink.compact_s": _mean_s(spans, "sink.compact"),
-            "sink.compact_kept": _attr(spans, "sink.compact", "kept"),
+            "sink.compact_s": _mean_s(spans_all, "sink.compact"),
+            "sink.compact_kept": _attr(spans_all, "sink.compact", "kept"),
             "sink.latest_state_s": _mean_s(spans, "sink.latest_state"),
             "es_sink.post_s": _mean_s(spans, "es_sink.post"),
             "es_sink.jobs": _attr(spans, "es_sink.post", "jobs"),
@@ -185,13 +186,16 @@ def assemble(ctx, result: dict, meta: dict, peak_kb: int, late_bound_s: float) -
         "live_keys": check.live_keys,
         "mismatched_keys": len(check.mismatched),
         "mismatched_by_store": check.by_store,
-        "known_defects": {"composite_key_separator": len(check.composite_sep)},
+        "known_defects": {
+            "composite_key_separator": len(check.composite_sep),
+            "compact_under_reader": int(ctx.notes.get("compact_under_reader_error") is not None),
+        },
         "unexplained_mismatches": check.unexplained + extra_bad,
         "errors": (loop.errors + qs.errors)[:5],
         "end_to_end": e2e,
         "peak_rss_mb": peak_kb / 1024,
         "window_end_at_s": ctx.notes["window_end"] - ctx.t_start,
-        **{k: v for k, v in ctx.notes.items() if k not in ("t0", "window_end", "stages_t0")},
+        **{k: v for k, v in ctx.notes.items() if k not in ("t0", "window_end", "stages_t0", "stages_t1")},
     }
     if ctx.trace:
         metrics = _layers(ctx, ctx.tracer.spans, loop, failed / attempted, check.mismatch_rate)

@@ -134,8 +134,7 @@ def _run(args, work: str, out_dir: str) -> int:
             result = {"replicate": replicate.run, "serve": serve.run}[args.workload](ctx)
             ctx.notes["checked_at_s"] = time.perf_counter() - T_START
             if args.trace:
-                stages = probes.stage_totals(spark.sparkContext)
-                for k, v in stages.items():
+                for k, v in ctx.notes["stages_t1"].items():
                     ctx.layer[f"spark.{k}"] = v - ctx.notes["stages_t0"][k]
             conf = dict(spark.sparkContext.getConf().getAll())
         finally:

@@ -6,16 +6,18 @@ warms it). Meanwhile it writes the ``public.accounts`` snapshot
 (``snapshot_table``) into the routed sink as one bulk epoch, compacts it
 (the compacted base), and writes ``HISTORY_EPOCHS`` uncompacted epochs on
 top. In the window an open-loop writer offers ``RATE`` changes per
-second -- ``envelope.encode`` -> ``TableRoutingSink`` epoch write -- while
-one closed-loop analyst runs seeded rounds of sink reads and registry
-operators against the directory the writer is filling.
+second -- ``envelope.encode`` -> ``TableRoutingSink`` epoch write --
+while one closed-loop analyst runs ``ANALYST_ROUNDS`` rounds of sink
+reads and registry operators against the directory the writer is
+filling.
 
 The writer calls the sink directly, not through the streaming pipeline:
 ``replicate`` measures the pipeline, and leaving its start-up out keeps
 a run inside the time budget. It does not compact inside the window:
 ``compact_event_log`` deletes ingest files that a concurrent
-``latest_state_view`` may be reading (the read then fails with
-FILE_NOT_EXIST), see README.md."""
+``latest_state_view`` may still be reading, and that read then fails
+with FILE_NOT_EXIST. After the window, ``_compact_under_reader``
+reproduces that defect once per run and reports it, see README.md."""
 
 from __future__ import annotations
 
@@ -38,12 +40,33 @@ from change_data_capture_service_spark.streaming.snapshot import snapshot_table
 
 from . import gen, harness, oracle
 from .loop import OpenLoop, QueryStats, closed_loop
-from .probes import stage_totals
 from .report import OPERATORS
 
 RATE = 40.0  # offered writer changes per second
 HISTORY_EPOCHS = 2
-TRIGGER_S = 2.0  # a writer epoch every 2 s
+# A writer epoch every 4 s, longer than one epoch takes here (about 3 s),
+# so every run has three epochs in its window. At 2 s the writer ran
+# epochs back to back, and whether a fifth one was needed for the last
+# few changes depended on the host's speed.
+TRIGGER_S = 4.0
+# One round of the analyst's seven queries lasts about as long as the
+# writer's window. A fixed count keeps every run's mix of reads beside
+# writes alike: running rounds until the writer stopped gave one round
+# in some runs and two in others, and the second round slowed the
+# writer's last cycle.
+ANALYST_ROUNDS = 1
+# Sink reads and operators alternate in a fixed order, so the same
+# queries meet the writer's epochs in every run: with the order shuffled
+# per seed, the round time's spread over five seeds was 0.33.
+QUERY_ORDER = (
+    "sink_latest_full",
+    "op_agg_sum_avg_minmax_count",
+    "sink_key_range",
+    "op_join_multi",
+    "sink_terms_agg",
+    "op_latest_state",
+    "op_knn_cosine_topk",
+)
 ENV_ROW_SCHEMA = "_op string, _lsn long, id long, name string, balance_cents long, status string"
 LAYOUT_TABLES = ("region", "nation", "customer", "supplier", "orders", "lineitem", "events", "embeddings")
 
@@ -79,8 +102,21 @@ def _check_operators(ctx: harness.Ctx, layout: str) -> list[str]:
         con.close()
 
 
+def _compact_under_reader(spark, sink_dir: str) -> str | None:
+    """The compaction defect, reproduced: a latest-state read planned
+    (its files listed) before ``compact_event_log`` runs and executed after
+    it. Returns the read's error, or None if the read succeeded."""
+    view = latest_state_view(spark, sink_dir, "public", "accounts")
+    compact_event_log(spark, sink_dir, "public", "accounts", "parquet")
+    try:
+        view.count()
+    except Exception as e:  # noqa: BLE001 - the defect under test
+        return f"{type(e).__name__}: {str(e)[:200]}"
+    return None
+
+
 def run(ctx: harness.Ctx) -> dict:
-    spark, tr, sc = ctx.spark, ctx.tracer, ctx.spark.sparkContext
+    spark, tr = ctx.spark, ctx.tracer
     w = ctx.work
     layout = f"{w}/layout"
     ctx.notes["layout_rows"] = gen.write_layout(ctx.seed, layout)
@@ -136,33 +172,23 @@ def run(ctx: harness.Ctx) -> dict:
     kinds.update({f"op_{k}": operator(k) for k in OPERATORS})
 
     def round_():
-        order = list(kinds)
-        rng.shuffle(order)
-        return [(k, harness.traced(tr, k, kinds[k])) for k in order]
+        return [(k, harness.traced(tr, k, kinds[k])) for k in QUERY_ORDER]
 
     for k in ("sink_latest_full", "sink_key_range", "sink_terms_agg"):  # warm each sink read, untimed
         kinds[k]()
     ops_check.join()
     ctx.notes["operator_mismatches"] = bad_ops
 
-    if ctx.trace:
-        ctx.notes["stages_t0"] = stage_totals(sc)
     loop = OpenLoop(stream.txns, ctx.seconds, TRIGGER_S, deliver)
     qstats = QueryStats()
-    t0 = time.perf_counter()
-    ctx.notes["setup_s"] = t0 - ctx.t_start
-    # the analyst reads while the writer runs, its tail cycle included, and
-    # finishes the round it is in, so every run samples whole rounds
-    writer_done = threading.Event()
-    analyst = threading.Thread(target=closed_loop, args=(round_, writer_done, qstats), name="analyst", daemon=True)
+    analyst = threading.Thread(target=closed_loop, args=(round_, ANALYST_ROUNDS, qstats), name="analyst", daemon=True)
+    t0 = harness.open_window(ctx)
     analyst.start()
     try:
         stats = loop.run(t0)
     finally:
-        writer_done.set()
         analyst.join(timeout=120)
-    ctx.notes["t0"] = t0
-    ctx.notes["window_end"] = time.perf_counter()
+    harness.close_window(ctx)
 
     # ---- correctness, outside the timed region
     truth = stream.truth()
@@ -172,4 +198,7 @@ def run(ctx: harness.Ctx) -> dict:
     if ctx.trace:
         n_events = len(stream.snapshot) + sum(map(len, stream.history)) + stats.delivered
         harness.sink_layer_stats(ctx, sink_dir, None, n_events, ["accounts"])
+    race = _compact_under_reader(spark, sink_dir)
+    ctx.notes["compact_under_reader_error"] = race
+    ctx.layer["check.compact_read_failures"] = int(race is not None)
     return {"loop": stats, "queries": qstats, "check": check, "extra_unexplained": len(bad_ops)}
