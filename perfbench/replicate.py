@@ -35,7 +35,11 @@ from .loop import OpenLoop, QueryStats
 
 RATE = 60.0  # offered changes per second
 WARMUP_S = 2.0  # changes due before the window, delivered by the untimed warm-up cycle
-TRIGGER_S = 5.0  # a cycle every 5 s: about one cycle's duration here
+# A cycle every 7 s, longer than one cycle takes here (about 5.5 s), so
+# the offered load is sustainable and each cycle's delay stays its own. At
+# 5 s cycles overran their slot, each overrun delayed the next cycle, and
+# freshness p50 spread 0.26 over seven seeds.
+TRIGGER_S = 7.0
 
 
 class CountingEs(MockEs):
