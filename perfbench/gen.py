@@ -338,8 +338,8 @@ class ReplicateStream:
 class ServeStream:
     """Envelope changes to ``public.accounts`` for the serve writer.
 
-    ``history`` holds ``history_epochs`` pre-timing epochs of updates (the
-    deep uncompacted history); ``txns`` is the timed open-loop stream, one
+    ``history`` holds ``history_epochs`` pre-timing epochs of changes (the
+    uncompacted history); ``txns`` is the timed open-loop stream, one
     change per transaction at ``rate`` changes per second."""
 
     OP_WEIGHTS = {"update": 0.7, "insert": 0.2, "delete": 0.1}

@@ -1,4 +1,5 @@
-"""Open-loop writer and closed-loop analyst drivers shared by the workloads."""
+"""Open-loop drivers shared by the workloads: the writer's cycles and the
+analyst's paced queries."""
 
 from __future__ import annotations
 
@@ -107,7 +108,7 @@ class OpenLoop:
 @dataclass
 class QueryStats:
     latency_s: list[float] = field(default_factory=list)
-    round_s: list[float] = field(default_factory=list)  # complete rounds with no failed query
+    round_s: list[float] = field(default_factory=list)  # summed latency of each round with no failed query
     attempted: int = 0
     failed: int = 0
     by_kind: dict = field(default_factory=dict)
@@ -119,18 +120,28 @@ class QueryStats:
         self.by_kind.setdefault(kind, []).append(latency_s)
 
 
-def closed_loop(
-    queries: Callable[[], list[tuple[str, Callable[[], object]]]],
+def paced_loop(
+    queries: list[tuple[str, Callable[[], object]]],
     rounds: int,
+    slot_s: float,
+    t0: float,
     stats: QueryStats,
 ) -> None:
-    """One analyst: run ``rounds`` rounds of (kind, query) back to back.
-    A failed query counts as attempted and failed, with no latency, and
-    its round is not timed."""
+    """One analyst, paced like a dashboard refresh: query ``i`` of the
+    run is due at ``t0 + i * slot_s`` and starts then, or as soon as the
+    query before it ends. Its latency runs from its due time, so a query
+    that overran delays the next one's figure too. A failed query counts
+    as attempted and failed, with no latency, and its round is not
+    summed."""
+    i = 0
     for _ in range(rounds):
-        ok, start = True, time.perf_counter()
-        for kind, q in queries():
-            t = time.perf_counter()
+        ok, total = True, 0.0
+        for kind, q in queries:
+            due = t0 + i * slot_s
+            i += 1
+            delay = due - time.perf_counter()
+            if delay > 0:
+                time.sleep(delay)
             try:
                 q()
             except Exception as e:  # noqa: BLE001 - counted against error_rate
@@ -139,6 +150,8 @@ def closed_loop(
                 stats.errors.append(f"{kind}: {type(e).__name__}: {str(e)[:300]}")
                 ok = False
                 continue
-            stats.record(kind, time.perf_counter() - t)
+            latency = time.perf_counter() - due
+            stats.record(kind, latency)
+            total += latency
         if ok:
-            stats.round_s.append(time.perf_counter() - start)
+            stats.round_s.append(total)

@@ -1,4 +1,4 @@
-"""`serve`: analyst reads beside a writer, on a sink with deep history.
+"""`serve`: analyst reads beside a writer, on a sink with uncompacted history.
 
 Set-up writes a seeded TPC-H-shaped layout and runs each analyst registry
 operator once against its DuckDB twin (the correctness check, which also
@@ -7,9 +7,9 @@ warms it). Meanwhile it writes the ``public.accounts`` snapshot
 (the compacted base), and writes ``HISTORY_EPOCHS`` uncompacted epochs on
 top. In the window an open-loop writer offers ``RATE`` changes per
 second -- ``envelope.encode`` -> ``TableRoutingSink`` epoch write --
-while one closed-loop analyst runs ``ANALYST_ROUNDS`` rounds of sink
-reads and registry operators against the directory the writer is
-filling.
+while one analyst runs ``ANALYST_ROUNDS`` rounds of sink reads and
+registry operators, paced one every ``QUERY_SLOT_S``, against the
+directory the writer is filling.
 
 The writer calls the sink directly, not through the streaming pipeline:
 ``replicate`` measures the pipeline, and leaving its start-up out keeps
@@ -39,12 +39,12 @@ from change_data_capture_service_spark.streaming.sink import (
 from change_data_capture_service_spark.streaming.snapshot import snapshot_table
 
 from . import gen, harness, oracle
-from .loop import OpenLoop, QueryStats, closed_loop
+from .loop import OpenLoop, QueryStats, paced_loop
 from .report import OPERATORS
 
 RATE = 40.0  # offered writer changes per second
 HISTORY_EPOCHS = 2
-# A writer epoch every 4 s, longer than one epoch takes here (about 3 s),
+# A writer epoch every 4 s, longer than one epoch takes here (about 2.5 s),
 # so every run has three epochs in its window. At 2 s the writer ran
 # epochs back to back, and whether a fifth one was needed for the last
 # few changes depended on the host's speed.
@@ -55,9 +55,13 @@ TRIGGER_S = 4.0
 # in some runs and two in others, and the second round slowed the
 # writer's last cycle.
 ANALYST_ROUNDS = 1
-# Sink reads and operators alternate in a fixed order, so the same
-# queries meet the writer's epochs in every run: with the order shuffled
-# per seed, the round time's spread over five seeds was 0.33.
+# The analyst's queries run in a fixed order, one due every 2 s (longer
+# than one takes alone), so each query meets the writer's epochs at the
+# same phase in every run; queries 3, 5 and 7 are due as epochs start.
+# Run back to back, which query overlapped an epoch depended on the
+# host's speed, and the round's summed latency spread 0.33 over eight
+# seeds on a calm host (0.33 over five with a seeded order).
+QUERY_SLOT_S = 2.0
 QUERY_ORDER = (
     "sink_latest_full",
     "op_agg_sum_avg_minmax_count",
@@ -171,8 +175,7 @@ def run(ctx: harness.Ctx) -> dict:
 
     kinds.update({f"op_{k}": operator(k) for k in OPERATORS})
 
-    def round_():
-        return [(k, harness.traced(tr, k, kinds[k])) for k in QUERY_ORDER]
+    round_queries = [(k, harness.traced(tr, k, kinds[k])) for k in QUERY_ORDER]
 
     for k in ("sink_latest_full", "sink_key_range", "sink_terms_agg"):  # warm each sink read, untimed
         kinds[k]()
@@ -181,8 +184,10 @@ def run(ctx: harness.Ctx) -> dict:
 
     loop = OpenLoop(stream.txns, ctx.seconds, TRIGGER_S, deliver)
     qstats = QueryStats()
-    analyst = threading.Thread(target=closed_loop, args=(round_, ANALYST_ROUNDS, qstats), name="analyst", daemon=True)
     t0 = harness.open_window(ctx)
+    analyst = threading.Thread(
+        target=paced_loop, args=(round_queries, ANALYST_ROUNDS, QUERY_SLOT_S, t0, qstats), name="analyst", daemon=True
+    )
     analyst.start()
     try:
         stats = loop.run(t0)
