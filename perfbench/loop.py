@@ -108,7 +108,8 @@ class OpenLoop:
 @dataclass
 class QueryStats:
     latency_s: list[float] = field(default_factory=list)
-    round_s: list[float] = field(default_factory=list)  # summed latency of each round with no failed query
+    round_s: list[float] = field(default_factory=list)  # summed run time of each round with no failed query
+    round_due_s: list[float] = field(default_factory=list)  # the same rounds' summed latency from due time
     attempted: int = 0
     failed: int = 0
     by_kind: dict = field(default_factory=dict)
@@ -130,18 +131,20 @@ def paced_loop(
     """One analyst, paced like a dashboard refresh: query ``i`` of the
     run is due at ``t0 + i * slot_s`` and starts then, or as soon as the
     query before it ends. Its latency runs from its due time, so a query
-    that overran delays the next one's figure too. A failed query counts
-    as attempted and failed, with no latency, and its round is not
-    summed."""
+    that overran delays the next one's latency too; a round's figure sums
+    its queries' run times instead, from start to end, so one overrun
+    counts once. A failed query counts as attempted and failed, with no
+    latency, and its round is not summed."""
     i = 0
     for _ in range(rounds):
-        ok, total = True, 0.0
+        ok, run_s, late_s = True, 0.0, 0.0
         for kind, q in queries:
             due = t0 + i * slot_s
             i += 1
             delay = due - time.perf_counter()
             if delay > 0:
                 time.sleep(delay)
+            start = time.perf_counter()
             try:
                 q()
             except Exception as e:  # noqa: BLE001 - counted against error_rate
@@ -150,8 +153,10 @@ def paced_loop(
                 stats.errors.append(f"{kind}: {type(e).__name__}: {str(e)[:300]}")
                 ok = False
                 continue
-            latency = time.perf_counter() - due
-            stats.record(kind, latency)
-            total += latency
+            end = time.perf_counter()
+            stats.record(kind, end - due)
+            run_s += end - start
+            late_s += end - due
         if ok:
-            stats.round_s.append(total)
+            stats.round_s.append(run_s)
+            stats.round_due_s.append(late_s)

@@ -1,10 +1,13 @@
 """Measurements taken from outside the engine: process memory from
-``/proc``, Spark's cumulative stage metrics, and file counts on disk."""
+``/proc``, Spark's cumulative stage metrics, and file counts on disk;
+and the ``/proc`` walk that finds the processes a run must wait for."""
 
 from __future__ import annotations
 
 import os
+import signal
 import threading
+import time
 
 RSS_INTERVAL_S = 0.5
 
@@ -21,6 +24,47 @@ def _children(pid: int) -> dict[int, list[int]]:
             continue
         kids.setdefault(ppid, []).append(int(d))
     return kids
+
+
+def descendants(pid: int) -> list[int]:
+    """Every live process ``pid`` started, directly or not."""
+    kids = _children(pid)
+    out, todo = [], list(kids.get(pid, []))
+    while todo:
+        p = todo.pop()
+        out.append(p)
+        todo.extend(kids.get(p, []))
+    return out
+
+
+def _start_time(pid: int) -> str | None:
+    """The process's start time in clock ticks, which tells it apart from
+    a later process given the same pid; None once it has ended."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+    except (OSError, IndexError):
+        return None
+    return None if fields[0] in ("Z", "X") else fields[19]
+
+
+def wait_ended(pids: list[int], timeout_s: float) -> None:
+    """Wait until every process in ``pids`` has ended; SIGKILL those still
+    running after ``timeout_s`` and wait for them too."""
+    live = {p: t for p in pids if (t := _start_time(p)) is not None}
+    deadline = time.monotonic() + timeout_s
+    killed = False
+    while live:
+        live = {p: t for p, t in live.items() if _start_time(p) == t}
+        if live and not killed and time.monotonic() > deadline:
+            for p in live:
+                try:
+                    os.kill(p, signal.SIGKILL)
+                except OSError:
+                    pass
+            killed = True
+        if live:
+            time.sleep(0.05)
 
 
 def _hwm_kb(pid: int) -> int:
@@ -45,13 +89,7 @@ class RssSampler:
         self._thread = threading.Thread(target=self._run, name="rss-sampler", daemon=True)
 
     def sample(self) -> None:
-        kids = _children(os.getpid())
-        todo, total = list(kids.get(os.getpid(), [])), 0
-        while todo:
-            p = todo.pop()
-            total += _hwm_kb(p)
-            todo.extend(kids.get(p, []))
-        self.peak_kb = max(self.peak_kb, total)
+        self.peak_kb = max(self.peak_kb, sum(map(_hwm_kb, descendants(os.getpid()))))
 
     def _run(self) -> None:
         while not self._stop.wait(RSS_INTERVAL_S):

@@ -6,6 +6,8 @@ where a workload does not call that layer."""
 
 from __future__ import annotations
 
+import statistics
+
 from .loop import percentile
 from .tracing import self_times
 
@@ -165,7 +167,7 @@ def assemble(ctx, result: dict, meta: dict, peak_kb: int, late_bound_s: float) -
         "events_per_s": loop.delivered / max(loop.last_commit - t0, 1e-9),
         "freshness_p50_s": percentile(loop.freshness_s, 50),
         "freshness_p90_s": percentile(loop.freshness_s, 90),
-        "query_round_s": sum(qs.round_s) / max(len(qs.round_s), 1),
+        "query_round_s": statistics.median(qs.round_s) if qs.round_s else 0.0,
     }
     ctx.layer["proc.peak_rss_mb"] = peak_kb / 1024
     details = {
@@ -175,7 +177,8 @@ def assemble(ctx, result: dict, meta: dict, peak_kb: int, late_bound_s: float) -
         "delivered_changes": loop.delivered,
         "cycles": loop.cycles,
         "queries": qs.attempted,
-        "query_rounds": len(qs.round_s),
+        "query_rounds_s": qs.round_s,
+        "query_round_due_s": statistics.median(qs.round_due_s) if qs.round_due_s else None,
         "query_p50_s": percentile(qs.latency_s, 50),
         "query_mean_s_by_kind": {k: sum(v) / len(v) for k, v in sorted(qs.by_kind.items())},
         "generator_late_s": loop.late_s,

@@ -26,6 +26,7 @@ import hashlib  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
+import signal  # noqa: E402
 import subprocess  # noqa: E402
 import sys  # noqa: E402
 
@@ -34,6 +35,7 @@ ROOT = os.path.dirname(BENCH_DIR)
 PACKAGE = "change_data_capture_service_spark"
 DRIVER_MEM = "2g"
 GEN_LATE_BOUND_S = 1.0  # a generator further behind its schedule fails the run
+JVM_EXIT_S = 30.0  # how long the JVM and its workers get to end before they are killed
 WORKLOADS = ("replicate", "serve")
 
 
@@ -105,10 +107,43 @@ def main(argv: list[str] | None = None) -> int:
     out_dir = os.path.join(BENCH_DIR, ".out")
     os.makedirs(out_dir, exist_ok=True)
     _prepare_env(work)
+    # a terminated run still stops Spark's JVM and its workers on the way out
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
     try:
         return _run(args, work, out_dir)
     finally:
+        _stop_jvm()
         shutil.rmtree(work, ignore_errors=True)
+
+
+def _stop_jvm() -> None:
+    """End Spark's JVM and every process it started, and wait for each.
+
+    ``SparkSession.stop`` leaves the JVM running until its stdin closes,
+    which happens only when this interpreter exits; the JVM then takes a
+    second or more to end, and its Python workers end after it. So close
+    that stdin here and wait, on every path out of the run."""
+    from pyspark import SparkContext
+
+    from perfbench import probes
+
+    started = probes.descendants(os.getpid())  # before the JVM ends and its children are re-parented
+    gateway = SparkContext._gateway
+    proc = getattr(gateway, "proc", None)
+    if gateway is not None:
+        try:
+            gateway.shutdown()
+        except Exception:  # noqa: BLE001 - the JVM may already be gone
+            pass
+        SparkContext._gateway = SparkContext._jvm = None
+    if proc is not None:
+        proc.stdin.close()  # the gateway server exits on EOF
+        try:
+            proc.wait(timeout=JVM_EXIT_S)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    probes.wait_ended(started, JVM_EXIT_S)
 
 
 def _run(args, work: str, out_dir: str) -> int:

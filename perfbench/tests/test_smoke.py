@@ -21,11 +21,36 @@ def _run(cwd, *args, timeout=600):
     )
 
 
+def _left_behind(marker: str) -> list[str]:
+    """Command lines of live processes that mention ``marker``."""
+    out = []
+    for d in os.listdir("/proc"):
+        try:
+            with open(f"/proc/{d}/cmdline", "rb") as f:
+                cmd = f.read().replace(b"\0", b" ").decode(errors="replace")
+        except OSError:
+            continue
+        if marker in cmd:
+            out.append(cmd)
+    return out
+
+
 @pytest.mark.parametrize("workload,trace", [("replicate", "1"), ("serve", "0")])
-def test_smoke_run_prints_checked_result(workload, trace):
-    p = _run(ROOT, "--workload", workload, "--seed", "3", "--seconds", "1", "--trace", trace)
-    assert p.returncode == 0, p.stderr[-2000:]
-    result = json.loads(p.stdout.strip().splitlines()[-1])
+def test_smoke_run_prints_checked_result(workload, trace, tmp_path):
+    # output goes to files, not pipes: the JVM inherits them, and reading a
+    # pipe to its end would wait for the JVM as well as for the run
+    with open(tmp_path / "out", "w+") as out, open(tmp_path / "err", "w+") as err:
+        p = subprocess.Popen(
+            [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", "3", "--seconds", "1", "--trace", trace],
+            cwd=ROOT, stdout=out, stderr=err,
+        )
+        p.wait(timeout=600)
+        # the run's JVM carries its work directory on its command line
+        assert _left_behind(f"perfbench/.work/{workload}-3-{p.pid}") == []
+        out.seek(0)
+        err.seek(0)
+        assert p.returncode == 0, err.read()[-2000:]
+        result = json.loads(out.read().strip().splitlines()[-1])
     assert set(result) == {"correct", "attempted", "failed", "metrics"}
     assert result["correct"] is True and result["failed"] == 0 and result["attempted"] >= 1
     want = report.LAYER_UNITS if trace == "1" else report.E2E_UNITS
