@@ -31,8 +31,11 @@ them onto Spark with a two-pass plan that is correct under partitioning:
    reference logs-and-skips (``replicator.go:335``).
 
 Scale: pass 1 touches only 'R'-tagged frames (predicate on the first byte
-pushes to the scan); pass 2 is embarrassingly parallel -- each frame
-decodes independently given the broadcast registry, no shuffle at all.
+pushes to the scan). Over a distributed frame log that is one filtered
+scan job; over a drained batch from ``walsender.frames_to_df`` the log is
+a driver-local relation, so the filters and the collect fold on the driver
+and pass 1 runs no Spark job at all. Pass 2 is embarrassingly parallel --
+each frame decodes independently given the broadcast registry, no shuffle.
 Tuple values keep the reference's string-degraded representation
 (``'u'`` -> the literal ``(unchanged)`` placeholder, ``replicator.go:350``;
 binary -> hex, where the reference keeps raw bytes).
@@ -49,6 +52,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from change_data_capture_service_spark.streaming.envelope import key_of_parts
 
 # Postgres timestamps in replication messages are microseconds since
 # 2000-01-01 00:00:00 UTC (the "Postgres epoch").
@@ -286,15 +291,12 @@ def parse_dml(b: bytes, relations: dict[int, Relation]) -> dict:
     }
 
 
-def _key_of(rel: Relation, payload: dict[str, str | None] | None) -> str | None:
-    """Reference key shape: ``schema.table:pkval`` with a ``no_pk_val``
-    fallback (replicator.go:375-380)."""
-    if payload is None:
-        return f"{rel.namespace}.{rel.name}:no_pk_val"
-    parts = [payload.get(k) for k in rel.key_columns]
-    if not parts or all(p is None for p in parts):
-        return f"{rel.namespace}.{rel.name}:no_pk_val"
-    return f"{rel.namespace}.{rel.name}:" + "|".join("" if p is None else p for p in parts)
+def _key_of(rel: Relation, payload: dict[str, str | None] | None) -> str:
+    """Reference key shape ``schema.table:pkval`` with a ``no_pk_val``
+    fallback (replicator.go:375-380), by the same rule as the snapshot
+    path's ``envelope.cdc_key``."""
+    parts = [payload.get(k) for k in rel.key_columns] if payload is not None else []
+    return key_of_parts(rel.namespace, rel.name, parts)
 
 
 def decode_frame(frame: bytes, relations: dict[int, Relation]) -> list[dict]:
@@ -399,6 +401,17 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
+def _relation_frames(frames: DataFrame, frame_col: str) -> list:
+    """The log's Relation frames: outer tag 'w' (XLogData) and inner
+    message tag 'R' at byte 26 -- one byte-level predicate on the binary
+    column, no Python involved. One filter and no projection: on a
+    driver-local batch each DataFrame step is a round of analysis, and
+    those rounds are most of the pass's cost."""
+    return frames.filter(
+        F.expr(f"substring({frame_col}, 1, 1) = X'77' AND substring({frame_col}, 26, 1) = X'52'")
+    ).collect()
+
+
 def collect_relations(frames: DataFrame, frame_col: str = "frame") -> dict[int, Relation]:
     """Pass 1: pull Relation ('R') messages out of the frame log into a
     driver-side registry. The filter on the inner tag byte is expressed
@@ -406,16 +419,8 @@ def collect_relations(frames: DataFrame, frame_col: str = "frame") -> dict[int, 
     relations are one-per-table-per-connection, so the collect is
     dim-scale by construction (the reference holds the same registry
     in memory, replicator.go:320-322)."""
-    rel_frames = (
-        # outer tag 'w' (XLogData) and inner message tag 'R' at byte 26 --
-        # byte-level predicates on the binary column, no Python involved
-        frames.filter(F.expr(f"substring({frame_col}, 1, 1) = X'77'"))
-        .filter(F.expr(f"substring({frame_col}, 26, 1) = X'52'"))
-        .select(frame_col)
-        .collect()
-    )
     relations: dict[int, Relation] = {}
-    for row in rel_frames:
+    for row in _relation_frames(frames, frame_col):
         _, _, _, inner = parse_xlogdata(bytes(row[frame_col]))
         rel = parse_relation(inner)
         # last registration wins, matching connection-order semantics
@@ -489,14 +494,8 @@ def collect_relation_versions(
     ``collect_relations``; the seq column (file order / LSN order) is what
     lets pass 2 resolve each DML frame against the schema in force at its
     position rather than whichever registration happened to be last."""
-    rel_frames = (
-        frames.filter(F.expr(f"substring({frame_col}, 1, 1) = X'77'"))
-        .filter(F.expr(f"substring({frame_col}, 26, 1) = X'52'"))
-        .select(seq_col, frame_col)
-        .collect()
-    )
     versions = RelationVersions()
-    for row in rel_frames:
+    for row in _relation_frames(frames, frame_col):
         _, _, _, inner = parse_xlogdata(bytes(row[frame_col]))
         versions.add(int(row[seq_col]), parse_relation(inner))
     return versions

@@ -347,10 +347,24 @@ def frames_to_df(spark, frames: list[bytes]):
     """Lift a drained frame batch into ``pgoutput.FRAME_SCHEMA`` (seq
     preserves arrival order -- the decode's LSN regime resolution needs
     it). The live path and the byte-fixture path converge here: every
-    downstream byte of decode/envelope/sink logic is shared."""
+    downstream byte of decode/envelope/sink logic is shared.
+
+    The batch crosses to the JVM as one Arrow table and plans as a
+    ``LocalTableScan``: the frames are already on the driver, so the
+    relation pass (``pgoutput.collect_relation_versions``) folds its byte
+    filters and collect there and runs no Spark job, while the DML pass
+    still spreads the rows over the default parallelism."""
+    import pyarrow as pa
+
     from change_data_capture_service_spark.sources.pgoutput import FRAME_SCHEMA
 
-    return spark.createDataFrame(list(enumerate(frames)), FRAME_SCHEMA)
+    table = pa.table(
+        {
+            "seq": pa.array(range(len(frames)), pa.int64()),
+            "frame": pa.array(frames, pa.binary()),
+        }
+    )
+    return spark.createDataFrame(table, FRAME_SCHEMA)
 
 
 def replicate_batch(

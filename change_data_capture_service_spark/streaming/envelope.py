@@ -17,7 +17,8 @@ uses ONE envelope for every op (FIXTURES.md A2):
                             ``replicator.go:144,365``)
     key          string     schema.table:pk (``replicator.go:374-379``),
                             built from the *declared* catalog PK, not the
-                            first-column assumption (``replicator.go:341``)
+                            first-column assumption (``replicator.go:341``);
+                            composite parts join with ``|`` (``key_of_parts``)
     before       map<string,string>  old tuple (update/delete; the reference
                             stubs these, R14/R15 -- the engine implements them)
     after        map<string,string>  new tuple (snapshot/insert/update),
@@ -31,6 +32,8 @@ with explicit schemas.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -63,10 +66,33 @@ def _string_degraded_map(cols: list[str], prefix: str = "") -> Column:
     )
 
 
+# The one key rule, shared by the snapshot/encode path (``cdc_key``, JVM
+# side) and the wire decode (``pgoutput._key_of``, Python): composite key
+# parts join with KEY_PART_SEP, a NULL part renders as the empty string,
+# and a key whose parts are all NULL is the reference's ``no_pk_val``
+# fallback (``replicator.go:375-380``). Both paths must agree, or a row
+# snapshotted and later changed over the wire lives under two keys.
+KEY_PART_SEP = "|"
+NO_PK_VAL = "no_pk_val"
+
+
+def key_of_parts(schema_name: str, table_name: str, parts: list[str | None]) -> str:
+    """``schema.table:pk[|pk2...]`` from already-stringified key parts."""
+    if all(p is None for p in parts):
+        return f"{schema_name}.{table_name}:{NO_PK_VAL}"
+    return f"{schema_name}.{table_name}:" + KEY_PART_SEP.join(
+        "" if p is None else p for p in parts
+    )
+
+
 def cdc_key(schema_name: str, table_name: str, pk_cols: list[str]) -> Column:
-    """``schema.table:pk[_pk2...]`` -- reference key construction
+    """``key_of_parts`` as a column -- reference key construction
     (``replicator.go:374-379``) generalized to composite declared PKs."""
-    pk = F.concat_ws("_", *[F.col(c).cast("string") for c in pk_cols])
+    parts = [F.col(c).cast("string") for c in pk_cols]
+    all_null = reduce(lambda a, b: a & b, [p.isNull() for p in parts])
+    pk = F.when(all_null, F.lit(NO_PK_VAL)).otherwise(
+        F.concat_ws(KEY_PART_SEP, *[F.coalesce(p, F.lit("")) for p in parts])
+    )
     return F.concat(F.lit(f"{schema_name}.{table_name}:"), pk)
 
 

@@ -21,11 +21,15 @@ EMPTY documents. This module is the engine's wire-real analogue:
 - Idempotence (the reference got this right): deterministic doc IDs.
   ``mode="event"`` keeps doc-per-event with ``_id = lsn`` -- an
   at-least-once replay overwrites the same documents. ``mode="state"``
-  keeps doc-per-KEY (``_id = key``): the batch is first compacted to its
-  max-LSN event per key (one ``groupBy`` on the batch, map-side
-  combinable), inserts/updates/snapshots become ``index`` actions with
-  the ``after`` payload and deletes become ``delete`` actions -- the
-  keyed upsert view the reference never implemented (R14/R15 stubs).
+  keeps doc-per-KEY (``_id = key``): every row of the batch is tagged
+  once as data, dead letter or control and given its index, id, action
+  and doc, then the batch keeps its max-LSN row per ``(_index, _id)``
+  through ONE key exchange; inserts/updates/snapshots become ``index``
+  actions with the ``after`` payload and deletes become ``delete``
+  actions -- the keyed upsert view the reference never implemented
+  (R14/R15 stubs). Because every row passes that exchange, AQE coalesces
+  a small epoch's posting stage to a single task and ``_bulk`` request;
+  a large epoch still posts from many partitions.
 - Failure semantics: a non-2xx response or a bulk reply with
   ``"errors": true`` raises, failing the task -> the batch -> the query,
   so the streaming checkpoint never commits a half-applied epoch and the
@@ -38,11 +42,14 @@ EMPTY documents. This module is the engine's wire-real analogue:
   observable version of skip-malformed, same contract as
   ``TableRoutingSink``'s ok=false partition.
 - TRUNCATE control events (NULL key by design) apply their fence within
-  the batch in state mode (events of the truncated table at or below the
-  fence LSN never index) and the fence itself lands in ``<prefix>control``
-  keyed by LSN; ``_bulk`` cannot express delete-by-query, so clearing
-  docs from EARLIER epochs is an out-of-band ``indices.delete`` the
-  control doc makes visible.
+  the batch in state mode (a broadcast left-anti join on the batch's
+  truncate rows: events of the truncated table at or below the fence LSN
+  never index) and the fence itself lands in ``<prefix>control`` keyed
+  by LSN; ``_bulk`` cannot express delete-by-query, so clearing docs
+  from EARLIER epochs is an out-of-band ``indices.delete`` the control
+  doc makes visible. A TRUNCATE message naming several tables gives
+  each table's row the same LSN, so they collide on one control doc id
+  and only one of them is kept (a known gap).
 - ``refresh`` defaults to FALSE: per-request refresh is the reference's
   single biggest throughput bug; opt back in only for tests that read
   their own writes immediately.
@@ -176,76 +183,84 @@ class EsBulkSink:
                 doc_body.alias("doc"),
             )
         else:
-            # state mode: compact the batch to its max-LSN event per key
-            # BEFORE emitting actions (one map-side-combinable groupBy on
-            # the batch; within-bulk action order then cannot matter).
-            # Malformed rows bypass compaction -- they have no usable key.
-            good = batch_df.filter(~malformed)
-            bad = batch_df.filter(malformed).select(
-                dead_index.alias("_index"),
-                dead_id.alias("_id"),
-                F.lit("index").alias("action"),
-                doc_body.alias("doc"),
+            # state mode: ONE plan for every row. Each row is tagged once as
+            # malformed (dead letter), control (TRUNCATE) or data and gets
+            # its _index, _id, action and doc; the batch then keeps one row
+            # per (_index, _id) through a single key exchange. Dead letters
+            # (content-hash id) and control rows (id = lsn) pass through
+            # that exchange like data rows, so no branch is unioned in after
+            # it and AQE can coalesce a small epoch's posting stage to one
+            # task -- one _bulk request.
+            is_control = F.col("op") == "truncate"
+            is_delete = F.col("op") == "delete"
+            kind = F.col("_kind")
+            state_doc = F.to_json(
+                F.struct(F.col("lsn"), F.col("ts"), F.col("key"), F.col("after").alias("data"))
+            )
+            tagged = batch_df.withColumn(
+                "_kind",
+                F.when(malformed, F.lit("dead"))
+                .when(is_control, F.lit("control"))
+                .otherwise(F.lit("data")),
+            ).select(
+                "schema_name",
+                "table_name",
+                "lsn",
+                "ts",
+                "op",
+                "_kind",
+                F.when(kind == "dead", dead_index)
+                .when(kind == "control", F.lit(self.index_prefix + "control"))
+                .otherwise(index_name)
+                .alias("_index"),
+                F.when(kind == "dead", dead_id)
+                .when(kind == "control", F.col("lsn").cast("string"))
+                .otherwise(F.col("key"))
+                .alias("_id"),
+                F.when((kind == "data") & is_delete, F.lit("delete"))
+                .otherwise(F.lit("index"))
+                .alias("action"),
+                F.when(kind != "data", doc_body)
+                .when(is_delete, F.lit(None).cast("string"))
+                .otherwise(state_doc)
+                .alias("doc"),
             )
             # TRUNCATE fence (same semantics as the parquet sink's
-            # compaction, sink.py:151-174): within the batch, every event
-            # of the truncated table with lsn <= the fence is superseded
-            # and must not be indexed. _bulk has no delete-by-query, so
-            # the cross-epoch half (docs indexed in EARLIER epochs) cannot
-            # be applied here: the fence event itself is indexed into
-            # <prefix>control (id = lsn, replay-idempotent) so operators
-            # see it and run the out-of-band indices.delete -- observable,
-            # never silent.
-            trunc = (
-                good.filter(F.col("op") == "truncate")
-                .groupBy("schema_name", "table_name")
-                .agg(F.max("lsn").alias("_fence_lsn"))
+            # compaction, sink.py): a data row of a table truncated in this
+            # batch at or below the fence LSN is superseded and must not be
+            # indexed. A broadcast left-anti join on the batch's raw
+            # truncate rows drops it -- no aggregate, no second exchange.
+            # _bulk has no delete-by-query, so the cross-epoch half (docs
+            # indexed in EARLIER epochs) cannot be applied here: the control
+            # row lands in <prefix>control (id = lsn, replay-idempotent) so
+            # operators see it and run the out-of-band indices.delete --
+            # observable, never silent.
+            fences = batch_df.filter(is_control).select(
+                F.col("schema_name").alias("_fence_schema"),
+                F.col("table_name").alias("_fence_table"),
+                F.col("lsn").alias("_fence_lsn"),
             )
-            ok = (
-                good.filter(F.col("op") != "truncate")
-                .join(F.broadcast(trunc), ["schema_name", "table_name"], "left")
-                .filter(
-                    F.col("_fence_lsn").isNull() | (F.col("lsn") > F.col("_fence_lsn"))
-                )
-                .drop("_fence_lsn")
-            )
-            control = good.filter(F.col("op") == "truncate").select(
-                F.lit(self.index_prefix + "control").alias("_index"),
-                F.col("lsn").cast("string").alias("_id"),
-                F.lit("index").alias("action"),
-                doc_body.alias("doc"),
+            live = tagged.join(
+                F.broadcast(fences),
+                (kind == "data")
+                & (F.col("schema_name") == F.col("_fence_schema"))
+                & (F.col("table_name") == F.col("_fence_table"))
+                & (F.col("lsn") <= F.col("_fence_lsn")),
+                "left_anti",
             )
             # lsn ties cannot happen on a real WAL (LSNs are unique), but a
             # deterministic tiebreak keeps replays byte-stable even on
             # malformed producers: deletes lose to concurrent upserts
             # (explicit priority -- alphabetical op order would invert it).
-            op_rank = F.when(F.col("op") == "delete", F.lit(1)).otherwise(F.lit(0))
-            last = (
-                ok.withColumn(
-                    "_rn",
-                    F.row_number().over(
-                        Window.partitionBy("key").orderBy(
-                            F.col("lsn").desc(), op_rank.asc(),
-                            F.col("ts").desc(), F.col("op"),
-                        )
-                    ),
-                )
+            op_rank = F.when(is_delete, F.lit(1)).otherwise(F.lit(0))
+            latest = Window.partitionBy("_index", "_id").orderBy(
+                F.col("lsn").desc(), op_rank.asc(), F.col("ts").desc(), F.col("op")
+            )
+            routed = (
+                live.withColumn("_rn", F.row_number().over(latest))
                 .filter(F.col("_rn") == 1)
-                .drop("_rn")
+                .select("_index", "_id", "action", "doc")
             )
-            after_body = F.to_json(
-                F.struct(F.col("lsn"), F.col("ts"), F.col("key"), F.col("after").alias("data"))
-            )
-            routed = last.select(
-                index_name.alias("_index"),
-                F.col("key").alias("_id"),
-                F.when(F.col("op") == "delete", F.lit("delete"))
-                .otherwise(F.lit("index"))
-                .alias("action"),
-                F.when(F.col("op") == "delete", F.lit(None).cast("string"))
-                .otherwise(after_body)
-                .alias("doc"),
-            ).unionByName(bad).unionByName(control)
 
         # to_json cannot emit a dynamic top-level field name, so build the
         # two known action shapes and branch (both are JSON-escaped by

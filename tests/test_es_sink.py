@@ -442,3 +442,43 @@ def test_streaming_restart_replays_failed_epoch(spark, es, tmp_path):
     assert sorted(users) == ["public.users:1", "public.users:2"]
     assert users["public.users:1"]["data"]["v"] == "a2"
     assert es.bulk_requests > reqs_before + 1  # the retry went over the wire
+
+
+def test_state_mode_mixed_batch_posts_one_request(spark, es):
+    """One state-mode plan for every row: upserts, a delete, an equal-LSN
+    delete/update tie, a one-table TRUNCATE fence and two dead letters,
+    spread over 4 partitions, land as the expected docs per index, replay
+    byte-identically, and leave the sink's single key exchange as one
+    coalesced posting task -- one _bulk request for the whole batch."""
+    sink = EsBulkSink(es.url, mode="state")
+    batch = _env(
+        spark,
+        [
+            ("insert", "users", 1, "public.users:1", None, {"id": "1", "v": "a"}),
+            ("update", "users", 4, "public.users:1", None, {"id": "1", "v": "a4"}),
+            ("insert", "users", 2, "public.users:2", None, {"id": "2", "v": "b"}),
+            ("delete", "users", 6, "public.users:2", {"id": "2"}, None),
+            ("delete", "users", 7, "public.users:3", {"id": "3"}, None),
+            ("update", "users", 7, "public.users:3", None, {"id": "3", "v": "c7"}),
+            ("insert", "items", 3, "public.items:9", None, {"id": "9"}),
+            ("insert", "items", 5, "public.items:8", None, {"id": "8"}),
+            ("truncate", "items", 4, None, None, None),
+            ("insert", "users", 8, None, None, {"id": "x"}),  # NULL key
+            ("insert", "no-dash", 9, "k", None, {"id": "y"}),  # unsafe name
+        ],
+    ).repartition(4)
+    sink(batch, epoch_id=0)
+    state = es.snapshot()
+    assert sorted(state) == ["cdc_control", "cdc_dead_letter", "cdc_public_items", "cdc_public_users"]
+    users = state["cdc_public_users"]
+    assert sorted(users) == ["public.users:1", "public.users:3"]  # users:2 deleted
+    assert users["public.users:1"]["data"]["v"] == "a4"
+    assert users["public.users:3"]["data"]["v"] == "c7"  # upsert wins the lsn tie
+    assert sorted(state["cdc_public_items"]) == ["public.items:8"]  # items:9 fenced
+    assert sorted(state["cdc_control"]) == ["4"]
+    assert len(state["cdc_dead_letter"]) == 2
+    assert es.bulk_requests == 1
+
+    sink(batch, epoch_id=0)  # replay
+    assert es.snapshot() == state
+    assert es.bulk_requests == 2

@@ -153,3 +153,101 @@ def test_mock_survives_client_vanishing_mid_handshake():
         time.sleep(0.2)
     # __exit__ joins the thread (timeout 5): reaching here without a
     # hang IS the assertion; the thread exited on the empty read
+
+
+def test_frames_to_df_relation_pass_runs_no_spark_job(spark):
+    """A drained batch is already on the driver: frames_to_df plans it as
+    a local relation, so the relation pass folds its byte filters and its
+    collect there and runs no Spark job. seq keeps arrival order, and an
+    empty drain is an empty, well-typed batch."""
+    sc = spark.sparkContext
+    frames = _script()
+    df = frames_to_df(spark, frames)
+    sc.setJobGroup("relation-pass", "relation pass over a drained batch")
+    try:
+        versions = P.collect_relation_versions(df)
+        jobs = sc.statusTracker().getJobIdsForGroup("relation-pass")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    assert versions.latest()[OID].name == "users"
+    rows = df.orderBy("seq").collect()
+    assert [(r.seq, bytes(r.frame)) for r in rows] == list(enumerate(frames))
+
+    empty = frames_to_df(spark, [])
+    assert empty.schema == P.FRAME_SCHEMA
+    assert empty.count() == 0
+    assert P.collect_relation_versions(empty).latest() == {}
+    assert P.decode_pgoutput(empty).count() == 0
+
+
+def test_composite_key_snapshot_then_wire_lives_under_one_key(spark, tmp_path):
+    """The snapshot path (envelope.cdc_key) and the wire decode
+    (pgoutput._key_of) key a composite primary key by one rule, NULL parts
+    included. A row snapshotted through CdcPipeline.snapshot and then
+    updated over the wire ends up under ONE key in both the routed sink
+    and the Elasticsearch mock, and a wire delete of another snapshotted
+    row removes it from both."""
+    from change_data_capture_service_spark.streaming.es_sink import EsBulkSink
+    from change_data_capture_service_spark.streaming.pipeline import CdcPipeline
+    from change_data_capture_service_spark.streaming.snapshot import snapshot_table
+    from change_data_capture_service_spark.testing import MockEs
+
+    oid, pk = 77002, ["order_id", "line_no"]
+    announce = P.encode_relation(
+        oid, "public", "order_items", [("order_id", 20, True), ("line_no", 23, True), ("sku", 25, False)]
+    )
+    items = spark.createDataFrame(
+        [(42, 3, "hat"), (42, 4, "cap"), (8, None, "odd"), (None, None, "nil")],
+        "order_id long, line_no int, sku string",
+    )
+    snap = snapshot_table(items, schema_name="public", table_name="order_items", pk_cols=pk)
+    rel = P.parse_relation(announce)
+    for r in snap.collect():
+        assert r.key == P._key_of(rel, r.after)
+
+    def update(cells):
+        return b"U" + struct.pack(">i", oid) + b"N" + P.encode_tuple_data(cells)
+
+    def delete(cells):
+        return b"D" + struct.pack(">i", oid) + b"K" + P.encode_tuple_data(cells)
+
+    script = [
+        P.encode_xlogdata(100, announce),
+        P.encode_xlogdata(110, update(["42", "3", "hat2"])),
+        P.encode_xlogdata(120, delete(["42", "4", None])),
+        _keepalive(120, reply=False),
+    ]
+    with MockWalSender(script) as srv:
+        with WalSenderClient(port=srv.port, user="repl", dbname="app") as client:
+            frames = replicate_batch(
+                client, "cdc_slot", "cdc_pub", max_frames=len(script), deadline_s=10
+            )
+    wire = P.decode_pgoutput(frames_to_df(spark, frames))
+
+    pipe = CdcPipeline(
+        spark,
+        changelog_dir=str(tmp_path / "log"),
+        sink_dir=str(tmp_path / "sink"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        fmt="parquet",
+    )
+    pipe.snapshot(items, "public", "order_items", pk_cols=pk)
+    wire.write.mode("append").parquet(pipe.changelog_dir)
+    pipe.run_available()
+    sink = {r.key: r.sku for r in pipe.latest_state("public", "order_items").collect()}
+
+    with MockEs() as es:
+        es_sink = EsBulkSink(es.url, mode="state")
+        es_sink(snap, epoch_id=0)
+        es_sink(wire, epoch_id=1)
+        docs = es.snapshot()["cdc_public_order_items"]
+
+    want = {
+        "public.order_items:42|3": "hat2",
+        "public.order_items:8|": "odd",
+        "public.order_items:no_pk_val": "nil",
+    }
+    assert sink == want
+    assert {k: d["data"]["sku"] for k, d in docs.items()} == want
